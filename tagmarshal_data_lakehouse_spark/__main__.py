@@ -35,6 +35,24 @@ def _spark_and_lake(args):
     return spark, Lakehouse(spark, args.warehouse)
 
 
+def _register_lake_views(spark, lake) -> None:
+    """Register the silver fact, the silver.dim_* tables the lake has, and
+    the gold DAG as the views the telemetry library reads."""
+    from .queries import telemetry
+
+    def opt(table):
+        return lake.read(table) if lake.exists(table) else None
+
+    telemetry.register_views(
+        spark,
+        lake.read("silver.fact_telemetry_event"),
+        opt("silver.dim_facility_topology"),
+        opt("silver.dim_course_profile"),
+        opt("silver.dim_sections_per_hole"),
+        build_gold=True,
+    )
+
+
 def cmd_bronze_upload(args) -> int:
     from .bronze_ingest import upload_file_to_bronze
 
@@ -137,22 +155,9 @@ def cmd_gold(args) -> int:
 
 def cmd_dq(args) -> int:
     from . import quality
-    from .queries import telemetry
 
     spark, lake = _spark_and_lake(args)
-    fact = lake.read("silver.fact_telemetry_event")
-
-    def opt(table):
-        return lake.read(table) if lake.exists(table) else None
-
-    telemetry.register_views(
-        spark,
-        fact,
-        opt("silver.dim_facility_topology"),
-        opt("silver.dim_course_profile"),
-        opt("silver.dim_sections_per_hole"),
-        build_gold=True,
-    )
+    _register_lake_views(spark, lake)
     results = quality.run_quality_checks(spark)
     failed = [r for r in results if not r.passed]
     for r in results:
@@ -339,13 +344,7 @@ def cmd_serve(args) -> int:
     from .serving import QueryServer
 
     spark, lake = _spark_and_lake(args)
-    fact = lake.read("silver.fact_telemetry_event")
-    topo = lake.read("dim_facility_topology") if lake.exists("dim_facility_topology") else None
-    profile = lake.read("dim_course_profile") if lake.exists("dim_course_profile") else None
-    sections = (
-        lake.read("dim_sections_per_hole") if lake.exists("dim_sections_per_hole") else None
-    )
-    telemetry.register_views(spark, fact, topo, profile, sections, build_gold=True)
+    _register_lake_views(spark, lake)
     srv = QueryServer(spark, ttl_seconds=args.ttl)
     names = args.names or sorted(telemetry.TELEMETRY_QUERIES)
     for name in names:

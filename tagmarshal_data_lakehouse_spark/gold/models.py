@@ -61,9 +61,9 @@ round_rollup AS (
         MAX(end_section) AS end_section,
         BOOL_OR(COALESCE(is_nine_hole, FALSE)) AS is_nine_hole,
         BOOL_OR(COALESCE(is_complete, FALSE)) AS is_complete,
-        AVG(pace) AS avg_pace_sec,
+        (CAST(SUM(CAST(pace AS DECIMAL(28,10))) AS DOUBLE) / COUNT(pace)) AS avg_pace_sec,
         MAX(pace) AS max_pace_sec,
-        AVG(pace_gap) AS avg_pace_gap_sec,
+        (CAST(SUM(CAST(pace_gap AS DECIMAL(28,10))) AS DOUBLE) / COUNT(pace_gap)) AS avg_pace_gap_sec,
         AVG(positional_gap) AS avg_positional_gap,
         SUM(CASE WHEN is_projected THEN 1 ELSE 0 END) AS projected_fix_count,
         SUM(CASE WHEN is_problem THEN 1 ELSE 0 END) AS problem_fix_count,
@@ -419,9 +419,9 @@ WITH hole_stats AS (
            MAX(fix_timestamp) AS hole_end_time,
            TIMESTAMPDIFF(SECOND, DATE_TRUNC('SECOND', MIN(fix_timestamp)),
                       DATE_TRUNC('SECOND', MAX(fix_timestamp))) AS duration_sec,
-           AVG(pace) AS avg_pace_sec,
+           (CAST(SUM(CAST(pace AS DECIMAL(28,10))) AS DOUBLE) / COUNT(pace)) AS avg_pace_sec,
            MAX(pace) AS max_pace_sec,
-           AVG(pace_gap) AS avg_pace_gap_sec,
+           (CAST(SUM(CAST(pace_gap AS DECIMAL(28,10))) AS DOUBLE) / COUNT(pace_gap)) AS avg_pace_gap_sec,
            BOOL_OR(is_complete) AS round_was_completed
     FROM fact_telemetry_event
     WHERE is_location_padding = FALSE AND hole_number IS NOT NULL
@@ -763,7 +763,8 @@ agg AS (
         COUNT(DISTINCT CASE WHEN NOT is_location_padding AND COALESCE(is_auto_assigned, FALSE) THEN round_id END) AS auto_assigned_rounds,
         MIN(fix_timestamp) AS first_fix_ts,
         MAX(fix_timestamp) AS last_fix_ts,
-        AVG(pace_gap) FILTER (WHERE NOT is_location_padding) AS avg_pace_gap_sec,
+        (CAST(SUM(CAST(pace_gap AS DECIMAL(28,10))) FILTER (WHERE NOT is_location_padding) AS DOUBLE)
+         / COUNT(pace_gap) FILTER (WHERE NOT is_location_padding)) AS avg_pace_gap_sec,
         PERCENTILE_APPROX(pace_gap, 0.5) FILTER (WHERE NOT is_location_padding) AS median_pace_gap_sec
     FROM base
 )
@@ -813,7 +814,8 @@ per_course AS (
         COUNT(DISTINCT CASE WHEN NOT is_location_padding AND COALESCE(is_nine_hole, FALSE) THEN round_id END) AS nine_hole_rounds,
         COUNT(DISTINCT CASE WHEN NOT is_location_padding AND COALESCE(is_secondary, FALSE) THEN round_id END) AS secondary_rounds,
         COUNT(DISTINCT CASE WHEN NOT is_location_padding AND COALESCE(is_auto_assigned, FALSE) THEN round_id END) AS auto_assigned_rounds,
-        AVG(pace_gap) FILTER (WHERE NOT is_location_padding) AS avg_pace_gap_sec,
+        (CAST(SUM(CAST(pace_gap AS DECIMAL(28,10))) FILTER (WHERE NOT is_location_padding) AS DOUBLE)
+         / COUNT(pace_gap) FILTER (WHERE NOT is_location_padding)) AS avg_pace_gap_sec,
         PERCENTILE_APPROX(pace_gap, 0.5) FILTER (WHERE NOT is_location_padding) AS median_pace_gap_sec
     FROM base GROUP BY course_id
 )
@@ -866,7 +868,7 @@ SELECT course_id, day_type, time_bucket, hour_of_day,
        COUNT(DISTINCT round_id) AS rounds,
        SUM(CASE WHEN is_problem THEN 1 ELSE 0 END) AS problem_rows,
        ROUND(100.0 * SUM(CASE WHEN is_problem THEN 1 ELSE 0 END) / NULLIF(COUNT(*), 0), 2) AS pct_problem_rows,
-       AVG(pace_gap) AS avg_pace_gap_sec,
+       (CAST(SUM(CAST(pace_gap AS DECIMAL(28,10))) AS DOUBLE) / COUNT(pace_gap)) AS avg_pace_gap_sec,
        PERCENTILE_APPROX(pace_gap, 0.5) AS median_pace_gap_sec
 FROM bucketed
 GROUP BY course_id, day_type, time_bucket, hour_of_day

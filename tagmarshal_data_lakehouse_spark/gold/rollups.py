@@ -54,8 +54,9 @@ DISTINCT pace_gap values (device pace gaps are reported at fixed
 resolution; fixture and testdata corpora measure in the hundreds);
 its combine is a single small shuffle.
 
-Float caveat: the full build's AVG() sums doubles in partition order;
-the combined average divides an exact DECIMAL(38,12) sum.  Integer-
+Float caveat: the full build divides an exact decimal pace-gap sum by
+its count in double (and averages battery doubles with AVG()); the
+combined average is an exact DECIMAL(38,12) quotient.  Integer-
 valued inputs (battery percentages) match exactly; fractional doubles
 can differ in the last ~1e-12 relative — pinned with a tolerance in
 tests/test_gold_incremental.py, exact for every other column.

@@ -97,7 +97,7 @@ def _make_simhash_udf():
         packed = (
             np.packbits((acc > 0).astype(np.uint8), axis=1, bitorder="little")
             .copy()
-            .view(np.int64)
+            .view("<i8")
             .reshape(-1)
         )
         sigs[nonempty_ids] = packed

@@ -34,7 +34,7 @@ _BRIDGE_SRC = (
 ).read_text()
 
 # The 7 deliberate skips — reasons in OPERATORS.md §"Bridge census" and
-# the R13/R14/R15 block comments. Change BOTH when (un)bridging a text.
+# the bridge's block comments. Change BOTH when (un)bridging a text.
 EXPECTED_SKIPS = {
     "ex_duplicate_fix_check",       # structurally empty: 0 dup (round, ts) pairs
     "expl_np_missing_ts_by_round",  # tie-arbitrary LIMIT 20 (all counts = 1)

@@ -5,6 +5,7 @@ topology → gold → status → query against a temp warehouse, all through
 from __future__ import annotations
 
 import os
+import re
 
 from tagmarshal_data_lakehouse_spark.__main__ import main
 
@@ -189,6 +190,12 @@ def test_cli_serve_runs_cached_queries(spark, tmp_path, capsys):
     out = capsys.readouterr().out
     assert out.count("== global_overview") == 2
     assert "1 hits / 1 misses" in out
+    # the dims the topology verb wrote (silver.dim_*) are what serve reads
+    assert main(base + ["serve", "topology", "sections_per_hole_dim"]) == 0
+    out = capsys.readouterr().out
+    for name in ("topology", "sections_per_hole_dim"):
+        rows = int(re.search(rf"== {name} \((\d+) rows\)", out).group(1))
+        assert rows > 0, (name, out)
 
 
 def test_cli_explain(spark, tmp_path, capsys):

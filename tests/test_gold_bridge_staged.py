@@ -1,20 +1,12 @@
-"""Driver-sim verification for the R8-staged gold bridge entries.
+"""Oracle parity for the gold bridge entries that complete the gold
+model surface.
 
-The nine staged entries (telemetry_bridge.R8_STAGED) complete the gold
-model surface's driver rows — every one of the 20 models in
-gold/models.py then has either a registered driver entry or a staged
-one.  They are kept OUT of the registry this round because the round-7
-rotation landed with the due-queue overflow at exactly PRIORITY_SLOTS
-(tests/test_registry_order.py would flag any further oracle-backed
-addition); this module holds them to the driver's exact standard in the
-meantime: the same build(spark, sf_dir) vs DuckDB-oracle compare the
-correctness driver runs, on the sf0.001 testdata.
-
-Round-8 promotion checklist (also in the staging note in
-telemetry_bridge.py): append R8_STAGED to QUERIES, slot the names into
-the sweep head, record the oracle texts in the ledger
-(tools/update_query_text_hashes.py --round 8), and move the
-timestamp-emitting names into test_tz_independence.TS_QUERIES.
+The nine entries below give the last gold/silver_normalized models their
+oracle-checked rows — every one of the 20 models in gold/models.py then
+has a registered bridge entry.  This module holds them to the registry
+sweep's exact standard with rows required (a 0=0 match proves nothing):
+the same build(spark, sf_dir) vs DuckDB-oracle compare, on the sf0.001
+testdata.
 """
 
 from __future__ import annotations
@@ -29,29 +21,41 @@ from tagmarshal_data_lakehouse_spark.queries import telemetry_bridge as tb
 from .oracle_harness import run_query_pair
 
 # sf0.001 for the suite's fast loop; STAGED_SF_DIR=<dir> re-runs the
-# matrix at driver scale (done at sf0.01 and sf0.1 before promotion —
-# decimal edge cases can be scale-dependent). Root follows the same
-# override every other fixture honors (conftest.TESTDATA).
+# matrix at sf0.01 (decimal edge cases can be scale-dependent).
+# Root follows the same override every other fixture honors
+# (conftest.TESTDATA).
 _TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 SF_DIR = os.environ.get("STAGED_SF_DIR", f"{_TESTDATA}/sf0.001")
 
+GOLD_ENTRIES = (
+    "gold_signal_quality_rounds",
+    "gold_course_configuration",
+    "gold_critical_column_gaps",
+    "gold_dim_round",
+    "gold_dim_device",
+    "gold_global_overview",
+    "gold_global_course_summary",
+    "gold_global_time_patterns",
+    "gold_fact_telemetry_fix",
+)
+_BY_NAME = {q.name: q for q in tb.QUERIES}
 
-@pytest.mark.parametrize("q", tb.R8_STAGED, ids=lambda q: q.name)
+
+@pytest.mark.parametrize("q", [_BY_NAME[n] for n in GOLD_ENTRIES], ids=lambda q: q.name)
 def test_staged_entry_matches_driver_oracle(spark, q):
     problems = run_query_pair(spark, q, SF_DIR, require_rows=True)
     assert not problems, f"{q.name}: {problems[:3]}"
 
 
 def test_staged_entries_cover_every_remaining_model():
-    """Registered + staged bridge entries must cover all 20 gold models
-    (the VERDICT r6 'What's missing' item 2, closed in two steps).
-    Every gold bridge entry's doc cites its model as
-    'gold/models.py <MODEL_CONST>' — matched with a word boundary so a
-    prose mention of another model (e.g. 'the bridged fact_rounds
-    chain') cannot mark that model covered."""
+    """Bridge entries must cover all 20 gold models.  Every gold bridge
+    entry's doc cites its model as 'gold/models.py <MODEL_CONST>' —
+    matched with a word boundary so a prose mention of another model
+    (e.g. 'the bridged fact_rounds chain') cannot mark that model
+    covered."""
     from tagmarshal_data_lakehouse_spark.gold.models import MODELS
 
-    docs = [(q.doc or "") for q in list(tb.QUERIES) + list(tb.R8_STAGED)]
+    docs = [(q.doc or "") for q in tb.QUERIES]
     missing = [
         m.name
         for m in MODELS
@@ -61,13 +65,3 @@ def test_staged_entries_cover_every_remaining_model():
         )
     ]
     assert not missing, f"gold models without a bridge entry: {missing}"
-
-
-def test_staged_entries_are_registered():
-    """Round-8 promotion happened: every R8_STAGED name must be live in
-    the registry (the inverse of the pre-promotion guard this replaces)."""
-    from tagmarshal_data_lakehouse_spark.queries import registry
-
-    reg = set(registry())
-    missing = [q.name for q in tb.R8_STAGED if q.name not in reg]
-    assert not missing, f"staged entries lost in promotion: {missing}"

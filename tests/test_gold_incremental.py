@@ -47,8 +47,9 @@ def lake_with_gold(spark, tmp_path_factory):
     return lake, sorted(models)
 
 
-# Float averages the rollup-combined global models derive from exact
-# DECIMAL sums; the full build's AVG() sums doubles in partition order,
+# Float averages the rollup-combined global models derive as a
+# DECIMAL(38,12) quotient; the full build divides in double (the exact
+# decimal pace-gap sum over its count) or averages doubles (battery),
 # so the two can differ in the last ~1e-12 relative (gold/rollups.py
 # docstring).  Every other column — counts, distincts, timestamps,
 # ROUND()ed percentages, the exact-regime median — must match exactly.
@@ -117,6 +118,23 @@ def test_incremental_absorbs_new_partition(spark, lake_with_gold, tmp_path):
         lake.overwrite(f"gold.{name}", df, partition_by=part)
     full = _snapshot(spark, lake, names)
     _assert_snapshots_match(inc, full)
+
+
+def test_global_course_summary_is_partition_order_independent(spark, tmp_path):
+    """The same fact at 1 partition and shuffled across 8 must build a
+    bit-identical global_course_summary: its averages ride exact decimal
+    sums, so the core count (which sets partition order) cannot move a
+    last bit between a full and an incremental build."""
+    fact = _silver_fact(spark, tmp_path, ["course_a", "course_b", "course_c"])
+    fact = spark.createDataFrame(fact.collect(), fact.schema)
+
+    def build(df):
+        out = GoldBuilder(spark).build(df, only=["global_course_summary"])
+        return sorted(tuple(r) for r in out["global_course_summary"].collect())
+
+    one = build(fact.coalesce(1))
+    shuffled = build(fact.orderBy(F.rand(7)).repartition(8))
+    assert shuffled == one
 
 
 def test_incremental_leaves_untouched_courses_alone(spark, lake_with_gold):

@@ -753,7 +753,23 @@ def test_simhash_vectorized_kernel_matches_reference(spark):
         assert got[i] == ref_simhash(t), (i, t[:40], got[i], ref_simhash(t))
 
 
-def test_minhash_numpy_twin_parity(spark, sf_smoke):
+def test_simhash_kernel_views_packed_bits_little_endian():
+    """np.packbits(bitorder="little") lays the 64 signature bits out as
+    little-endian bytes, so the int64 view must name '<i8': a native
+    view would byte-swap every signature on a big-endian host.  On a
+    little-endian host both views give the same values (pinned by
+    test_simhash_vectorized_kernel_matches_reference), so the byte order
+    is pinned in the kernel text."""
+    import inspect
+    import re
+
+    from tagmarshal_data_lakehouse_spark.training import simhash
+
+    views = re.findall(r"\.view\(([^)]*)\)", inspect.getsource(simhash._make_simhash_udf))
+    assert views == ['"<i8"'], views
+
+
+def test_minhash_numpy_twin_parity(spark, sf_smoke, monkeypatch):
     """r14: the Arrow/numpy minhash signature kernel must be
     bit-identical to the transform/array_min expression — including the
     two-argument xxhash64 chaining (hashLong(sd, hashLong(h, 42))) and
@@ -761,26 +777,26 @@ def test_minhash_numpy_twin_parity(spark, sf_smoke):
     routing branches over real and adversarial corpora."""
     from tagmarshal_data_lakehouse_spark.training import clustering, dedup
 
-    docs = spark.read.parquet(f"{sf_smoke}/documents.parquet")
-    save = clustering._GEMM_ASSIGN_MIN_TOTAL_STEPS
-    try:
-        clustering._GEMM_ASSIGN_MIN_TOTAL_STEPS = 10**18  # force expression
-        a = dedup.minhash_signatures(docs, keep_gram_hashes=True).collect()
-        clustering._GEMM_ASSIGN_MIN_TOTAL_STEPS = 0  # force numpy twin
-        b = dedup.minhash_signatures(docs, keep_gram_hashes=True).collect()
-        da = {r["doc_id"]: (list(r["sig"]), list(r["gram_hashes"])) for r in a}
-        db = {r["doc_id"]: (list(r["sig"]), list(r["gram_hashes"])) for r in b}
-        assert da == db
+    def force(min_total_steps):
+        # 10**18 forces the expression branch, 0 the numpy twin
+        monkeypatch.setattr(clustering, "_GEMM_ASSIGN_MIN_TOTAL_STEPS", min_total_steps)
 
-        rows = [(1, None), (2, ""), (3, "one"), (4, "a b c d e f g"), (5, "x " * 500)]
-        edf = spark.createDataFrame(rows, "doc_id long, text string")
-        clustering._GEMM_ASSIGN_MIN_TOTAL_STEPS = 10**18
-        ea = dedup.minhash_signatures(edf).collect()
-        clustering._GEMM_ASSIGN_MIN_TOTAL_STEPS = 0
-        eb = dedup.minhash_signatures(edf).collect()
-        ca = {r["doc_id"]: (list(r["sig"]) if r["sig"] is not None else None) for r in ea}
-        cb = {r["doc_id"]: (list(r["sig"]) if r["sig"] is not None else None) for r in eb}
-        assert ca == cb
-        assert all(v is not None and len(v) == 32 for v in ca.values())
-    finally:
-        clustering._GEMM_ASSIGN_MIN_TOTAL_STEPS = save
+    docs = spark.read.parquet(f"{sf_smoke}/documents.parquet")
+    force(10**18)
+    a = dedup.minhash_signatures(docs, keep_gram_hashes=True).collect()
+    force(0)
+    b = dedup.minhash_signatures(docs, keep_gram_hashes=True).collect()
+    da = {r["doc_id"]: (list(r["sig"]), list(r["gram_hashes"])) for r in a}
+    db = {r["doc_id"]: (list(r["sig"]), list(r["gram_hashes"])) for r in b}
+    assert da == db
+
+    rows = [(1, None), (2, ""), (3, "one"), (4, "a b c d e f g"), (5, "x " * 500)]
+    edf = spark.createDataFrame(rows, "doc_id long, text string")
+    force(10**18)
+    ea = dedup.minhash_signatures(edf).collect()
+    force(0)
+    eb = dedup.minhash_signatures(edf).collect()
+    ca = {r["doc_id"]: (list(r["sig"]) if r["sig"] is not None else None) for r in ea}
+    cb = {r["doc_id"]: (list(r["sig"]) if r["sig"] is not None else None) for r in eb}
+    assert ca == cb
+    assert all(v is not None and len(v) == 32 for v in ca.values())

@@ -158,11 +158,16 @@ def test_encode_gemm_twin_parity(spark, sf_smoke):
     """r14: the Arrow/GEMM product-code twin must emit bit-identical
     codes to the expression path, including NULL/ragged/NaN rows (the
     per-subspace confident-gap routing falls back to the exact fold
-    expressions)."""
+    expressions) — and both must replace an existing `out` column in
+    place, so they return the same column list."""
     embs = spark.read.parquet(f"{sf_smoke}/embeddings.parquet")
     books = pq.train_codebooks(embs, m=8, k=16, iters=2)
-    a = pq.encode(embs, books, use_gemm=False).select("vec_id", "pq_code").collect()
-    b = pq.encode(embs, books, use_gemm=True).select("vec_id", "pq_code").collect()
+    stale = embs.withColumn("pq_code", F.lit("stale"))
+    ga = pq.encode(stale, books, use_gemm=False)
+    gb = pq.encode(stale, books, use_gemm=True)
+    assert ga.columns == gb.columns == stale.columns
+    a = ga.select("vec_id", "pq_code").collect()
+    b = gb.select("vec_id", "pq_code").collect()
     assert {r["vec_id"]: r["pq_code"] for r in a} == {r["vec_id"]: r["pq_code"] for r in b}
     rows = [
         (1, [0.0] * 64),
